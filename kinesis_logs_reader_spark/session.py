@@ -118,10 +118,6 @@ def build_session(
         builder = builder.config("spark.driver.memory", driver_memory)
     builder = (
         builder
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
         # Headless-engine listener posture (r15 floor work): the UI is
         # off above, so console progress repaints and per-task live
@@ -139,46 +135,27 @@ def build_session(
         # a longer window only matters in that contended case.
         .config("spark.python.auth.socketTimeout", "120s")
     )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    # extra_conf LAST: the caller's deployment profile overrides the
-    # defaults above (e.g. bench.py's AQE-off local profile) — applied
-    # after _RUNTIME_CONF so an override isn't silently clobbered.
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # Runtime re-assertion (covers a pre-existing session getOrCreate
-    # returned), still honoring extra_conf precedence. Includes the
-    # builder-block SQL confs that ARE runtime-settable (shuffle
-    # partitions, arrow, parquet pushdown) so a reused session actually
-    # gets the requested profile — e.g. bench.py's 8-partition local
-    # profile; non-settable ones (spark.master, ui, socket timeout)
-    # no-op via the except guard.
-    _builder_sql_conf = {
+    # extra_conf LAST: the caller's deployment profile (e.g. bench.py's
+    # AQE-off local profile) overrides every default.
+    conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",
         "spark.sql.parquet.aggregatePushdown": "true",
+        **_RUNTIME_CONF,
+        **(extra_conf or {}),
     }
-    for k, v in _builder_sql_conf.items():
-        if k in (extra_conf or {}):
-            continue
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    # Re-assert on the live session: getOrCreate may have returned a
+    # pre-existing session that ignored the builder. Keys that are not
+    # runtime-settable (deployment-time conf) are skipped.
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
-    for k, v in _RUNTIME_CONF.items():
-        if k in (extra_conf or {}):
-            continue
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    for k, v in (extra_conf or {}).items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # deployment-time conf (non-runtime-settable)
     # Mark configured so load_table's configure_runtime() won't re-apply
     # _RUNTIME_CONF over the caller's overrides.
     spark.__dict__["_klrs_runtime_configured"] = True

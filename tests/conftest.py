@@ -12,10 +12,11 @@ import io
 import gzip
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from kinesis_logs_reader_spark.session import build_session
 

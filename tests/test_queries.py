@@ -8,6 +8,9 @@ sf0.01.
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -55,6 +58,8 @@ def test_driver_export_window():
     assert {canonical_name(k) for k in eq} == set(QUERIES)
     assert {canonical_name(k) for k in eo} == set(ORACLES)
     assert set(eo) <= set(eq)
+    # values are the registry functions themselves, never a wrapper
+    assert all(fn is QUERIES[canonical_name(k)] for k, fn in eq.items())
     # insertion order: the window is literally the first 50 dict entries
     first_ins = list(eq)[: len(DRIVER_WINDOW)]
     assert [canonical_name(k) for k in first_ins] == DRIVER_WINDOW
@@ -121,3 +126,25 @@ def test_staged_window_consistency():
     assert set(staged) <= set(QUERIES)
     assert set(staged) <= set(ORACLES)
     assert not set(staged) & set(DRIVER_WINDOW)
+
+
+def test_package_reads_no_behaviour_env_switch():
+    """The package has one code path per query: no module may read the
+    process environment, except the deployment path of the default
+    table directory (sources/tables.py, SPARK_GRAFT_SF_DIR)."""
+    import kinesis_logs_reader_spark
+
+    root = Path(kinesis_logs_reader_spark.__file__).parent
+    reads = []
+    for path in sorted(root.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for node in ast.walk(ast.parse("\n".join(lines), str(path))):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if name not in ("environ", "environb", "getenv"):
+                continue
+            rel = path.relative_to(root).as_posix()
+            line = lines[node.lineno - 1]
+            if rel == "sources/tables.py" and "SPARK_GRAFT_SF_DIR" in line:
+                continue
+            reads.append(f"{rel}:{node.lineno}: {line.strip()}")
+    assert not reads, reads

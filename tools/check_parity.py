@@ -13,8 +13,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 
@@ -25,10 +26,6 @@ SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-# canon_cell / table_hash live in functions/canon.py, shared with the
-# in-driver canonical-row dump so the two can never diverge (r15).
 
 
 def main() -> int:

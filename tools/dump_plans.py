@@ -10,8 +10,9 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 ANNOTATED = {
     "q02_filter_predicates": "range/IN/LIKE predicates pushed into the parquet scan (PushedFilters)",
