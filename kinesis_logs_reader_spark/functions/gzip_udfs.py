@@ -1,15 +1,17 @@
-"""Gzip scalar kernels as Arrow-batched pandas UDFs.
+"""Gzip scalar kernels as Arrow-batched pandas UDFs, for byte columns.
 
 The reference gunzips each Kinesis record's ``Data`` blob row-at-a-time
 in Python (reference kinesis_logs_reader/utils.py:18-21, called from
-kinesis_logs_reader.py:87-88). Spark has no builtin SQL gunzip, so this
-is the one custom scalar kernel the ingest path needs. It is a
-``pandas_udf`` (Arrow batch transfer, one Python call per ~10k rows)
-rather than a row-at-a-time udf — the only Python hot path in the
-engine's ingest pipeline.
+kinesis_logs_reader.py:87-88). Spark has no builtin SQL gunzip for a
+binary column, so these kernels serve the ingest paths whose blobs
+arrive as bytes: the Kinesis connector's ``data`` column and the boto3
+drain in ``reader.py``. They are ``pandas_udf``s (Arrow batch transfer,
+one Python call per ~10k rows) rather than row-at-a-time udfs. File
+replay does not use them: it gunzips in the JVM through the ``text``
+source (``sources/envelope.py``).
 
-``gzip_bytes`` is the test-only inverse (reference utils.py:24-29),
-used by fixture builders.
+``gzip_blob`` and ``gzip_compress`` are the test-only inverses
+(reference utils.py:24-29), used by fixture builders.
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ def gunzip_text(data: pd.Series) -> pd.Series:
 def gunzip_text_safe(data: pd.Series) -> pd.Series:
     """PERMISSIVE gunzip: corrupt/undecodable blobs -> null instead of
     failing the task. At 100 TB a single truncated record must not
-    kill a 6-hour job; nulls flow to the ingest dead-letter filter."""
+    kill a 6-hour job; a null blob yields no rows downstream."""
 
     def _safe(b) -> str | None:
         if b is None:

@@ -8,21 +8,24 @@ The reference's entire dataflow (kinesis_logs_reader.py:79-104) is:
 Here that is one declarative DataFrame chain over either a batch or a
 streaming source of raw gzipped-JSON blobs:
 
-    load -> gunzip_text (pandas UDF, R5) -> from_json(envelope) (R6)
-    -> filter messageType == 'DATA_MESSAGE' (R7, kinesis_logs_reader.py:91-92)
-    -> explode(logEvents) (R8, kinesis_logs_reader.py:94)
+    file replay: text source, wholetext (gunzip in the JVM, R5)
+                 -> validate_utf8
+    byte column: gunzip_text (pandas UDF, R5)
+    -> from_json(envelope), once per blob (R6)
+    -> explode(when(messageType == 'DATA_MESSAGE', logEvents))
+       (R7 + R8, kinesis_logs_reader.py:91-94)
     -> select extractedFields (R9, kinesis_logs_reader.py:95)
     -> optional cast to the typed VPC-flow-log schema (README.md:31-35)
 
-Catalyst orders the filter before the explode (generate) exactly as the
-reference hand-orders it, and prunes the envelope columns immediately
-after the project — for free.
+A control message explodes to no rows, so the reference's hand-ordered
+"drop before flatten" (kinesis_logs_reader.py:91-92) reads the same
+parsed envelope as the flatten.
 
 Sources:
-- hermetic tests/CI: a directory of ``*.gz`` files, one blob per file
-  (binaryFile source), or any DataFrame with a binary ``data`` column.
-  One file <-> one Kinesis record; directories-per-shard replays shard
-  interleaving.
+- hermetic tests/CI: a directory of ``*.gz`` files, one blob per file,
+  read with no Python worker; or any DataFrame with a binary ``data``
+  column. One file <-> one Kinesis record; directories-per-shard
+  replays shard interleaving.
 - production: Spark's Kinesis connector (e.g. spark-sql-kinesis-asl)
   yields the same ``data: binary`` column; ``read_cwl_stream`` accepts
   its options pass-through. One Kinesis shard maps to one input
@@ -36,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text
+from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text, gunzip_text_safe
 
 # Envelope of a CWL subscription record (kinesis_logs_reader.py:91-95;
 # fixture builder tests/test_kinesis_logs_reader.py:35-45).
@@ -85,38 +88,47 @@ FLOW_LOG_FIELDS: list[tuple[str, str]] = [
 ]
 
 
-def decode_envelope(
-    raw: DataFrame, data_col: str = "data", mode: str = "strict"
-) -> DataFrame:
-    """gzipped-JSON blob column -> one row per log event (map column).
+def parse_envelope(df: DataFrame, text: Column) -> DataFrame:
+    """Envelope JSON text column -> one row per log event (map column).
 
-    Implements R5-R9 of the reference pipeline declaratively. Works on
-    both batch and streaming DataFrames.
-
-    ``mode``:
-    - ``strict`` (reference semantics — its package has no try/except):
-      corrupt gzip fails the task;
-    - ``permissive``: corrupt gzip -> null text -> ``from_json`` null
-      envelope -> dropped by the DATA_MESSAGE filter, so bad records
-      vanish instead of killing the job (malformed JSON is already
-      null under from_json's default PERMISSIVE mode).
+    R6-R9 of the reference pipeline with one ``from_json`` per blob:
+    the envelope is parsed once into ``e``, and the explode reads both
+    ``messageType`` and ``logEvents`` from it. A CONTROL_MESSAGE, a null
+    envelope (malformed JSON, or a blob the permissive decode nulled)
+    and a null or empty ``logEvents`` all explode to no rows.
     """
-    from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text_safe
-
-    gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
-    parsed = raw.withColumn(
-        "envelope", F.from_json(gunzip(F.col(data_col)), ENVELOPE_SCHEMA)
-    )
+    envelope = F.col("e")
     return (
-        parsed
-        # R7: control messages dropped (kinesis_logs_reader.py:91-92);
-        # null envelopes (permissive corrupt records) drop here too
-        .filter(F.col("envelope.messageType") == "DATA_MESSAGE")
-        # R8: flatten (kinesis_logs_reader.py:94)
-        .select(F.explode("envelope.logEvents").alias("event"))
+        df.select(F.from_json(text, ENVELOPE_SCHEMA).alias("e"))
+        # R7 + R8: drop control messages (kinesis_logs_reader.py:91-92)
+        # and flatten (:94)
+        .select(
+            F.explode(
+                F.when(envelope.messageType == "DATA_MESSAGE", envelope.logEvents)
+            ).alias("event")
+        )
         # R9: project the logical row (kinesis_logs_reader.py:95)
         .select(F.col("event.extractedFields").alias("fields"))
     )
+
+
+def decode_envelope(
+    raw: DataFrame, data_col: str = "data", mode: str = "strict"
+) -> DataFrame:
+    """gzipped-JSON byte column -> one row per log event (map column).
+
+    The byte-column path: the Kinesis connector's ``data`` column and
+    the boto3 drain. Works on both batch and streaming DataFrames.
+
+    ``mode``:
+    - ``strict`` (reference semantics — its package has no try/except):
+      corrupt gzip or invalid UTF-8 fails the task;
+    - ``permissive``: such a blob decodes to null and yields no rows
+      (malformed JSON is already null under from_json's default
+      PERMISSIVE mode).
+    """
+    gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
+    return parse_envelope(raw, gunzip(F.col(data_col)))
 
 
 def typed_flow_logs(events: DataFrame, fields: list[tuple[str, str]] | None = None) -> DataFrame:
@@ -134,6 +146,28 @@ def typed_flow_logs(events: DataFrame, fields: list[tuple[str, str]] | None = No
     return events.select(*cols)
 
 
+def _replay_events(reader, path: str, mode: str) -> DataFrame:
+    """A directory of ``*.gz`` blobs -> one row per log event.
+
+    ``reader`` is a batch or streaming reader. The ``text`` source with
+    ``wholetext`` yields each file as one row, gunzipped in the JVM by
+    Hadoop's GzipCodec (picked by the ``.gz`` extension), so no Python
+    worker runs. Strict mode fails on a corrupt blob with an error that
+    names the file, and on invalid UTF-8; permissive mode skips corrupt
+    files (``ignoreCorruptFiles``) and nulls invalid UTF-8.
+    """
+    permissive = mode == "permissive"
+    reader = (
+        reader.format("text")
+        .option("wholetext", "true")
+        .option("pathGlobFilter", "*.gz")
+        .option("recursiveFileLookup", "true")
+        .option("ignoreCorruptFiles", str(permissive).lower())
+    )
+    check_utf8 = F.try_validate_utf8 if permissive else F.validate_utf8
+    return parse_envelope(reader.load(path), check_utf8("value"))
+
+
 def read_cwl_batch(
     spark: SparkSession,
     path: str,
@@ -146,20 +180,15 @@ def read_cwl_batch(
 
     ``start_time`` (datetime) maps the reference's AT_TIMESTAMP iterator
     (kinesis_logs_reader.py:68-77) onto file replay: only blobs whose
-    mtime is after it are read (binaryFile ``modifiedAfter`` — pruned at
+    mtime is after it are read (``modifiedAfter`` — pruned at
     file-listing time, the batch analog of a positioned shard open).
     """
-    reader = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gz")
-        .option("recursiveFileLookup", "true")
-    )
+    reader = spark.read
     if start_time is not None:
         reader = reader.option(
             "modifiedAfter", start_time.strftime("%Y-%m-%dT%H:%M:%S")
         )
-    raw = reader.load(path).select(F.col("content").alias("data"))
-    events = decode_envelope(raw, mode=mode)
+    events = _replay_events(reader, path, mode)
     return typed_flow_logs(events, fields) if typed else events
 
 
@@ -188,27 +217,12 @@ def read_cwl_stream(
         reader = spark.readStream.format("kinesis")
         for k, v in kinesis_options.items():
             reader = reader.option(k, v)
-        raw = reader.load().select(F.col("data"))
+        events = decode_envelope(reader.load(), mode=mode)
     elif path is not None:
-        # Streaming sources require an explicit schema; binaryFile's is fixed.
-        binary_file_schema = T.StructType(
-            [
-                T.StructField("path", T.StringType()),
-                T.StructField("modificationTime", T.TimestampType()),
-                T.StructField("length", T.LongType()),
-                T.StructField("content", T.BinaryType()),
-            ]
-        )
-        reader = (
-            spark.readStream.format("binaryFile")
-            .schema(binary_file_schema)
-            .option("pathGlobFilter", "*.gz")
-            .option("recursiveFileLookup", "true")
-        )
+        reader = spark.readStream
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        raw = reader.load(path).select(F.col("content").alias("data"))
+        events = _replay_events(reader, path, mode)
     else:
         raise ValueError("need path= (file replay) or kinesis_options=")
-    events = decode_envelope(raw, mode=mode)
     return typed_flow_logs(events, fields) if typed else events

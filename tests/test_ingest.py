@@ -7,16 +7,26 @@ order-insensitive row-set equality (:192-195), golden TSV header/rows
 
 from __future__ import annotations
 
+import gzip
 import io
+import json
+import re
+import uuid
+
+import pytest
 
 from pyspark.sql import functions as F
 
 from kinesis_logs_reader_spark.cli import print_stream
 from kinesis_logs_reader_spark.functions.gzip_udfs import gzip_compress, gunzip_text, gzip_blob, gunzip_blob
 from kinesis_logs_reader_spark.reader import KinesisLogsReader
-from kinesis_logs_reader_spark.sources.envelope import read_cwl_batch
+from kinesis_logs_reader_spark.sources.envelope import (
+    decode_envelope,
+    read_cwl_batch,
+    read_cwl_stream,
+)
 
-from tests.conftest import make_event
+from tests.conftest import data_message, gz_blob, make_event
 
 
 def test_gunzip_roundtrip(spark):
@@ -271,3 +281,123 @@ def test_reader_rejects_unknown_kwargs(spark):
 
     with _pytest.raises(TypeError, match="kinesis_options"):
         KinesisLogsReader("s", spark=spark, **{"kinesis.region": "us-east-1"})
+
+
+# ------------------------------------------------ file replay on the JVM
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_jvm_only_one_parse(plan: str) -> None:
+    """No Python worker on the path and one JSON parse per blob."""
+    assert not re.search(r"ArrowEvalPython|BatchEvalPython|PythonUDF", plan), plan
+    assert plan.count("from_json(") == 1, plan
+
+
+def _drain_to_memory(spark, stream, tmp_path):
+    """One ``Trigger.AvailableNow`` drain into a memory sink; raises the
+    query's failure. Returns the sink's rows and the finished query."""
+    name = f"replay_{uuid.uuid4().hex}"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / name))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    return spark.table(name).collect(), q
+
+
+def test_decode_envelope_gunzips_and_parses_once(spark):
+    """The byte-column path (connector ``data`` column, boto3 drain)
+    runs the gunzip UDF once and ``from_json`` once per blob."""
+    raw = spark.createDataFrame(
+        [(gz_blob(data_message([make_event(i)])),) for i in range(3)], "data binary"
+    )
+    events = decode_envelope(raw)
+    plan = _executed_plan(events)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("from_json(") == 1, plan
+    assert len(events.collect()) == 3
+
+
+def test_read_cwl_batch_plan_has_no_python_worker(spark, envelope_dir):
+    _assert_jvm_only_one_parse(_executed_plan(read_cwl_batch(spark, envelope_dir)))
+
+
+def test_read_cwl_stream_plan_has_no_python_worker(spark, envelope_dir, tmp_path):
+    rows, q = _drain_to_memory(spark, read_cwl_stream(spark, envelope_dir), tmp_path)
+    assert len(rows) == 5
+    _assert_jvm_only_one_parse(q._jsq.explainInternal(False))
+
+
+def _replay_cases() -> dict[str, tuple[dict[str, bytes], list[str], bool]]:
+    """case -> (files, srcports replayed, whether strict mode raises)."""
+    good = gz_blob(data_message([make_event(1)]))
+    typed = make_event(2)
+    typed["extractedFields"]["srcport"] = 1026  # int, reference tests:48-55
+    pretty = json.dumps(data_message([typed, make_event(3)]), indent=2).encode() + b"\n"
+    half = len(pretty) // 2
+    bad_utf8 = json.dumps(data_message([make_event(4)])).encode().replace(b"event 4", b"\xff\xfe")
+    return {
+        "decoded": (
+            {
+                "good.gz": good,
+                "members.gz": gzip.compress(pretty[:half]) + gzip.compress(pretty[half:]),
+            },
+            ["1025", "1026", "1027"],
+            False,
+        ),
+        "empty": ({"good.gz": good, "zero.gz": b"", "empty.gz": gzip.compress(b"")}, ["1025"], False),
+        "invalid_utf8": ({"good.gz": good, "bad.gz": gzip.compress(bad_utf8)}, ["1025"], True),
+        "truncated": ({"good.gz": good, "bad.gz": gz_blob(data_message([make_event(5)] * 50))[:60]}, ["1025"], True),
+    }
+
+
+@pytest.mark.parametrize("case", ["decoded", "empty", "invalid_utf8", "truncated"])
+@pytest.mark.parametrize("mode", ["strict", "permissive"])
+@pytest.mark.parametrize("source", ["batch", "stream"])
+def test_file_replay_edge_cases(spark, tmp_path, source, mode, case):
+    """Batch and AvailableNow replay agree on every blob shape: odd but
+    valid blobs decode, empty ones yield nothing, and a corrupt blob
+    fails strict mode or is dropped by permissive mode."""
+    files, expected, strict_raises = _replay_cases()[case]
+    src = tmp_path / "blobs"
+    src.mkdir()
+    for name, blob in files.items():
+        (src / name).write_bytes(blob)
+
+    def replay():
+        if source == "batch":
+            return read_cwl_batch(spark, str(src), typed=False, mode=mode).collect()
+        stream = read_cwl_stream(spark, str(src), typed=False, mode=mode)
+        return _drain_to_memory(spark, stream, tmp_path)[0]
+
+    if strict_raises and mode == "strict":
+        with pytest.raises(Exception):
+            replay()
+        return
+    assert sorted(r["fields"]["srcport"] for r in replay()) == expected
+
+
+@pytest.mark.parametrize("source", ["batch", "stream"])
+def test_strict_error_names_the_file(spark, tmp_path, source):
+    """A truncated blob fails strict replay with an error naming it."""
+    src = tmp_path / "blobs"
+    src.mkdir()
+    (src / "good.gz").write_bytes(gz_blob(data_message([make_event(1)])))
+    bad = src / "shard-7-truncated.gz"
+    bad.write_bytes(gz_blob(data_message([make_event(5)] * 50))[:60])
+
+    with pytest.raises(Exception) as err:
+        if source == "batch":
+            read_cwl_batch(spark, str(src), typed=False).collect()
+        else:
+            _drain_to_memory(spark, read_cwl_stream(spark, str(src), typed=False), tmp_path)
+    assert str(bad) in str(err.value)
